@@ -14,6 +14,7 @@ import os
 import pytest
 from pyspark.sql import types as T
 
+from tests.conftest import SF_TEST
 from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
 
 SF_DIRS = [
@@ -48,3 +49,17 @@ def test_declared_schemas_match_disk(spark, sf_dir):
     """Every catalog table at every sf dir matches the declared schema."""
     problems = Catalog(spark, sf_dir).validate_schemas()
     assert problems == []
+
+
+def test_schema_drift_raises_on_every_access(spark, tmp_path):
+    """A drifted table (renamed column) fails its first access AND a
+    retry: the (dir, table) pair is marked validated only after the
+    comparison passes, never before — otherwise the retry would read the
+    declared schema silently and serve NULLs for the drifted column."""
+    spark.read.parquet(f"{SF_TEST}/region.parquet").withColumnRenamed(
+        "r_name", "r_label"
+    ).write.parquet(str(tmp_path / "region.parquet"))
+    with pytest.raises(ValueError, match="schema drift"):
+        Catalog(spark, str(tmp_path)).region
+    with pytest.raises(ValueError, match="schema drift"):
+        Catalog(spark, str(tmp_path)).region

@@ -9,6 +9,7 @@ from collections import defaultdict
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from uw_hadoop_aglorithms_spark.functions.geo import GOLDMAN, region_tag
 from uw_hadoop_aglorithms_spark.streaming import runner, trending, windows
@@ -153,11 +154,14 @@ def test_stream_trending_equals_batch_except_open_windows(spark, replay):
         for r in batch_rows
         if r.window_start != last_window[r.event_type]
     }
+    stream = trending.stream_trending_arrivals(
+        spark, f"{replay}/events", f"{replay}/cp_trend"
+    )
+    # UTC walls like the batch form, never process-zone-rendered instants
+    assert isinstance(stream.schema["window_start"].dataType, T.TimestampNTZType)
     got = {
         (r.event_type, r.window_start, r.cnt, r.prev, r.alert)
-        for r in trending.stream_trending_arrivals(
-            spark, f"{replay}/events", f"{replay}/cp_trend"
-        ).collect()
+        for r in stream.collect()
     }
     assert got == expected
     assert got, "stream should emit closed windows"

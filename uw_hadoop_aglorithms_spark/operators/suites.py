@@ -617,6 +617,16 @@ def _sbe_replay_dir(
     )
 
 
+#: stream_batch_equiv's stateful aggregations carry per-window/per-key
+#: PARTIAL aggregates (map-side combine), so the state exchange is sized
+#: by the open-window/key cardinality, not input volume: one shuffle
+#: partition per micro-batch (round 12, was 4: 17.1 s -> 14.5 s at sf0.1,
+#: interleaved n=4 minima, from 3 fewer state-store tasks per micro-batch
+#: across 8 concurrent streams). A fresh checkpoint pins the state layout
+#: per call, so scoping the conf for the run never conflicts across runs.
+STREAM_SHUFFLE_PARTITIONS = 1
+
+
 def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eight REAL Structured Streaming runs under one key (round 5 folds
     the streaming front door in as variants so the registry stays at the
@@ -629,9 +639,24 @@ def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-event_type tumbling forms in complete mode over the same
     scrambled replay: the final tables equal the batch oracles verbatim
     regardless of arrival order.
-    variant='dedup' / 'decon' — the ingestion front door: see
-    _ingest_collect for the operators and the closed-form watermark
-    oracle design.
+    variant='dedup' — stream_exact_dedup's ADMITTED set over the
+    document replay (one doc per minute, 8 block files = 8
+    micro-batches): digest rows surviving dropDuplicatesWithinWatermark.
+    The oracle replays the micro-batch watermark sequence in closed
+    form: file k holds doc_ids [k*W,(k+1)*W), W=ceil(n/8)
+    (prepare_doc_replay_dir's explicit block boundaries), and the
+    watermark governing state eviction in batch b is max-event-time
+    through batch b-2 minus the 120-min delay — the lag-one rule pinned
+    empirically at sf0.1 (all 8 duplicate pairs, including the
+    15-min-margin 1619/2875 admit and the 1641/2221 drops). A duplicate
+    is admitted iff that watermark has passed the last KEPT copy's
+    expiry (kept_ts + delay); drops never extend state.
+    variant='decon' — stream_decontaminate's emitted rows over the same
+    document replay: per-doc Bloom-probe counts for every contaminated
+    doc whose 60-min arrival window the FINAL watermark (max arrival -
+    60 min; AvailableNow runs no-data batches until the state flushes)
+    has closed. Counts equal the batch bloom variant — same bitmap,
+    same deterministic FPs.
     variant='sessions' — streaming sessionization (session_window,
     append mode) over the TIME-ORDERED events replay: emits exactly the
     batch sessions whose close (last event + 30-min gap) the final
@@ -651,48 +676,31 @@ def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-one per-batch watermark sequence in closed form, drops rows
     older than it, and emits only windows the final watermark closed —
     batch counts minus the dropped events.
-    All streams run CONCURRENTLY from driver threads (independent
-    sinks/checkpoints)."""
+
+    All streams run CONCURRENTLY from driver threads, each with its own
+    memory sink and a checkpoint subdirectory of one per-call root; the
+    emitted sets are collected (a memory sink is driver state by
+    construction, and the emitted set IS the result contract)."""
+    import functools
     import shutil
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
     from uw_hadoop_aglorithms_spark.streaming import runner
 
-    replay = _sbe_replay_dir(spark, sf_dir)
-    replay_t = _sbe_replay_dir(spark, sf_dir, order="time")
-    replay_l = _cached_replay_dir(
+    scrambled = _sbe_replay_dir(spark, sf_dir)
+    ordered = _sbe_replay_dir(spark, sf_dir, order="time")
+    late = _cached_replay_dir(
         "events_late", sf_dir,
         lambda d: runner.prepare_events_late_replay_dir(spark, sf_dir, d),
     )
-    ckpt = tempfile.mkdtemp(prefix="sbe_ckpt_")
-    ck_se = tempfile.mkdtemp(prefix="sbe_ck_se_")
-    ck_rj = tempfile.mkdtemp(prefix="sbe_ck_rj_")
-    ck_lt = tempfile.mkdtemp(prefix="sbe_ck_lt_")
-    ck_sw = tempfile.mkdtemp(prefix="sbe_ck_sw_")
-    ck_rg = tempfile.mkdtemp(prefix="sbe_ck_rg_")
-    # The stateful agg repartitions to spark.sql.shuffle.partitions in
-    # EVERY micro-batch; the state (one row per event-time window) is
-    # tiny, so scope the conf down for the run — a fresh checkpoint pins
-    # the state layout per call, so this never conflicts across runs. On
-    # a real cluster the state is sized by the window count, not input
-    # rows, so a small fixed partition count is the right shape there too.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # Default 1 (round 12, was 4): the state exchange carries per-window
-    # PARTIAL aggregates (map-side combine), so its row count is bounded
-    # by the open-window/key cardinality, not input volume — measured
-    # 17.1 s -> 14.5 s at sf0.1 (interleaved n=4 minima) from 3 fewer
-    # state-store tasks per micro-batch across 8 concurrent streams.
-    # Parameterized for deployments whose key cardinality is genuinely
-    # wide (e.g. per-user sessions over a large user space).
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "1"),
+    docs = _cached_replay_dir(
+        "docs", sf_dir,
+        lambda d: runner.prepare_doc_replay_dir(spark, sf_dir, d),
     )
-    def grab_sessions():
-        out = runner.stream_user_sessions(
-            spark, replay_t, ck_se, query_name="sbe_sessions_mem"
-        ).select(
+
+    def sessions(*args, **kw):
+        return runner.stream_user_sessions(*args, **kw).select(
             "user_id",
             "session_start",
             # the runner returns WALLS (render.walls_out); micros of
@@ -703,97 +711,54 @@ def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("lus"),
             "n_events",
         )
-        return [
-            ("sessions", r.session_start, int(r.user_id), r.lus, int(r.n_events))
-            for r in out.collect()
-        ]
 
-    def grab_swin():
-        out = runner.stream_sliding_event_count(
-            spark, replay, ck_sw, query_name="sbe_swin_mem"
+    # variant, runner call, replay dir, row shaper -> (window_start,
+    # doc_id, digest, n)
+    specs = [
+        ("window", runner.stream_event_count, scrambled,
+         lambda r: (r.window_start, None, None, int(r.cnt))),
+        ("swin", runner.stream_sliding_event_count, scrambled,
+         lambda r: (r.window_start, None, None, int(r.cnt))),
+        ("region", runner.stream_region_event_count, scrambled,
+         lambda r: (r.window_start, None, r.event_type, int(r.cnt))),
+        ("dedup", runner.stream_exact_dedup, docs,
+         lambda r: (None, int(r.doc_id), r.digest, None)),
+        ("decon", functools.partial(runner.stream_decontaminate, sf_dir=sf_dir), docs,
+         lambda r: (r.window_start, int(r.doc_id), None, int(r.n_shared_ngrams))),
+        ("sessions", sessions, ordered,
+         lambda r: (r.session_start, int(r.user_id), r.lus, int(r.n_events))),
+        ("rjoin", runner.stream_range_join, ordered,
+         lambda r: (None, int(r.purchase_id), f"{r.user_id}:{r.other_type}",
+                    int(r.other_id))),
+        ("late", runner.stream_event_count_append, late,
+         lambda r: (r.window_start, None, None, int(r.cnt))),
+    ]
+    ckpt_root = tempfile.mkdtemp(prefix="sbe_ckpt_")
+
+    def collect(spec) -> list[tuple]:
+        variant, run, replay, shape = spec
+        out = run(
+            spark, replay, os.path.join(ckpt_root, variant),
+            query_name=f"sbe_{variant}_mem",
         )
-        return [
-            ("swin", r.window_start, None, None, int(r.cnt))
-            for r in out.collect()
-        ]
+        return [(variant, *shape(r)) for r in out.collect()]
 
-    def grab_region():
-        out = runner.stream_region_event_count(
-            spark, replay, ck_rg, query_name="sbe_region_mem"
-        )
-        return [
-            ("region", r.window_start, None, r.event_type, int(r.cnt))
-            for r in out.collect()
-        ]
-
-    def grab_late():
-        out = runner.stream_event_count_append(
-            spark, replay_l, ck_lt, query_name="sbe_late_mem"
-        )
-        return [
-            ("late", r.window_start, None, None, int(r.cnt))
-            for r in out.collect()
-        ]
-
-    def grab_rjoin():
-        out = runner.stream_range_join(
-            spark, replay_t, ck_rj, query_name="sbe_rjoin_mem"
-        )
-        return [
-            (
-                "rjoin", None, int(r.purchase_id),
-                f"{r.user_id}:{r.other_type}", int(r.other_id),
-            )
-            for r in out.collect()
-        ]
-
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        with ThreadPoolExecutor(6) as pool:
-            f_ing = pool.submit(_ingest_collect, spark, sf_dir)
-            f_se = pool.submit(grab_sessions)
-            f_rj = pool.submit(grab_rjoin)
-            f_lt = pool.submit(grab_late)
-            f_sw = pool.submit(grab_swin)
-            f_rg = pool.submit(grab_region)
-            out = runner.stream_event_count(
-                spark, replay, ckpt, query_name="stream_batch_equiv_mem"
-            )
-            win = [
-                ("window", r.window_start, None, None, int(r.cnt))
-                for r in out.collect()
-            ]
-            dd, dc = f_ing.result()
-            se, rj, lt = f_se.result(), f_rj.result(), f_lt.result()
-            sw, rg = f_sw.result(), f_rg.result()
+        with ThreadPoolExecutor(len(specs)) as pool:
+            rows = [row for part in pool.map(collect, specs) for row in part]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         # the memory sinks register temp views and the checkpoints are
         # per-call scratch — bench runs this REPS times, so neither may
         # accumulate
-        for v in (
-            "stream_batch_equiv_mem", "sbe_sessions_mem", "sbe_rjoin_mem",
-            "sbe_late_mem", "sbe_swin_mem", "sbe_region_mem",
-        ):
+        for variant, *_ in specs:
             try:
-                spark.catalog.dropTempView(v)
+                spark.catalog.dropTempView(f"sbe_{variant}_mem")
             except Exception:
                 pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(ck_se, ignore_errors=True)
-        shutil.rmtree(ck_rj, ignore_errors=True)
-        shutil.rmtree(ck_lt, ignore_errors=True)
-        shutil.rmtree(ck_sw, ignore_errors=True)
-        shutil.rmtree(ck_rg, ignore_errors=True)
-    rows = (
-        win
-        + sw
-        + rg
-        + [("dedup", None, d, dg, None) for d, dg in dd]
-        + [("decon", ws, d, None, n) for d, ws, n in dc]
-        + se
-        + rj
-        + lt
-    )
+        shutil.rmtree(ckpt_root, ignore_errors=True)
     # timestamp_ntz: the streamed walls round-trip collect/createDataFrame
     # without session- or process-zone interpretation (render.walls_out)
     return spark.createDataFrame(
@@ -801,79 +766,6 @@ def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "variant string, window_start timestamp_ntz, doc_id long,"
         " digest string, n long",
     ).orderBy("variant", "window_start", "doc_id")
-
-
-def _ingest_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Session-scoped DOCUMENT replay (the ingest variants) — same
-    cache/cleanup machinery as the events replay, different prepare."""
-    from uw_hadoop_aglorithms_spark.streaming import runner
-
-    return _cached_replay_dir(
-        "docs", sf_dir,
-        lambda d: runner.prepare_doc_replay_dir(spark, sf_dir, d),
-    )
-
-
-def _ingest_collect(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
-    """The streaming front door under the oracle contract (round 5):
-    both ingestion-time operators run as REAL AvailableNow streams over
-    the deterministic document replay (one doc per minute, 8 block
-    files = 8 micro-batches); returns their collected emitted sets
-    (dedup_rows, decon_rows) for the stream_batch_equiv suite.
-
-    'dedup' — stream_exact_dedup's ADMITTED set: digest rows surviving
-    dropDuplicatesWithinWatermark. The oracle replays the micro-batch
-    watermark sequence in closed form: file k holds doc_ids
-    [k*W,(k+1)*W), W=ceil(n/8) (prepare_doc_replay_dir's explicit block
-    boundaries), and the watermark governing state eviction in batch b
-    is max-event-time through batch b-2 minus the 120-min delay — the
-    lag-one rule pinned empirically at sf0.1 (all 8 duplicate pairs,
-    including the 15-min-margin 1619/2875 admit and the 1641/2221
-    drops). A duplicate is admitted iff that watermark has passed the
-    last KEPT copy's expiry (kept_ts + delay); drops never extend state.
-
-    'decon' — stream_decontaminate's emitted rows: per-doc Bloom-probe
-    counts for every contaminated doc whose 60-min arrival window the
-    FINAL watermark (max arrival - 60 min; AvailableNow runs no-data
-    batches until the state flushes) has closed. Counts equal the batch
-    bloom variant — same bitmap, same deterministic FPs.
-
-    Both memory-sink results are collected and re-wrapped (a memory
-    sink is driver state by construction, and the admitted set IS the
-    result contract). Caller owns the shuffle-partition scoping."""
-    import shutil
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
-    from uw_hadoop_aglorithms_spark.streaming import runner
-
-    replay = _ingest_replay_dir(spark, sf_dir)
-    ck_dd = tempfile.mkdtemp(prefix="ingest_ck_dd_")
-    ck_dc = tempfile.mkdtemp(prefix="ingest_ck_dc_")
-    try:
-        with ThreadPoolExecutor(2) as pool:
-            f_dd = pool.submit(
-                runner.stream_exact_dedup, spark, replay, ck_dd,
-                "ingest_dedup_mem",
-            )
-            f_dc = pool.submit(
-                runner.stream_decontaminate, spark, replay, ck_dc, sf_dir,
-                "ingest_decon_mem",
-            )
-            dd = [(int(r.doc_id), r.digest) for r in f_dd.result().collect()]
-            dc = [
-                (int(r.doc_id), r.window_start, int(r.n_shared_ngrams))
-                for r in f_dc.result().collect()
-            ]
-    finally:
-        for v in ("ingest_dedup_mem", "ingest_decon_mem"):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
-        shutil.rmtree(ck_dd, ignore_errors=True)
-        shutil.rmtree(ck_dc, ignore_errors=True)
-    return dd, dc
 
 
 # --------------------------------------------------------------------------
@@ -2042,7 +1934,7 @@ def _suite_oracles() -> dict[str, str]:
         # the streaming run must equal the BATCH tumbling-window oracle
         # window variant = the batch event-count oracle; dedup/decon =
         # the streaming front door's closed-form replay of the
-        # micro-batch watermark sequence (_ingest_collect docstring:
+        # micro-batch watermark sequence (stream_batch_equiv docstring:
         # block files of width W=ceil(n/8), lag-one eviction watermark,
         # no-data-batch final flush for the windowed counts)
         "stream_batch_equiv": _u(

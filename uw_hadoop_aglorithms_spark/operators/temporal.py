@@ -5,9 +5,10 @@ its joins all equi-joins — SURVEY.md §2.3/§2.10); both are table-stakes
 for an events pipeline, so the engine supplies them Spark-first:
 
 - user_sessions — `F.session_window` (native Structured-Streaming-
-  compatible sessionization). The DuckDB oracle derives the same
-  sessions relationally (lag → gap ≥ GAP → cumulative-sum session ids),
-  which is also exactly how a pre-3.2 Spark would implement it.
+  compatible sessionization; the `sessions` query body is shared with
+  streaming/runner.stream_user_sessions). The DuckDB oracle derives the
+  same sessions relationally (lag → gap ≥ GAP → cumulative-sum session
+  ids), which is also exactly how a pre-3.2 Spark would implement it.
 - asof_last_order — as-of join (each event matched to the most recent
   order of the same customer at-or-before the event time). Spark has no
   ASOF JOIN; the scalable composition is the union trick: tag both
@@ -35,16 +36,15 @@ from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
 SESSION_GAP_S = 1800
 
 
-def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionize events per user with a 30-minute inactivity gap.
-
-    Output: one row per session — user_id, session_start (first event),
-    last_ts (last event), n_events. A new session starts when the gap
-    from the previous event is >= SESSION_GAP_S (session_window merges
-    strictly-closer events; the oracle uses the same >= break)."""
-    ev = Catalog(spark, sf_dir).events
+def sessions(frame: DataFrame) -> DataFrame:
+    """The ONE sessionization query, batch or stream: per-user
+    session_window with a SESSION_GAP_S inactivity gap — user_id,
+    session_start (first event), last_ts (last event), n_events. A new
+    session starts when the gap from the previous event is >=
+    SESSION_GAP_S (session_window merges strictly-closer events; the
+    oracle uses the same >= break)."""
     return (
-        ev.groupBy(
+        frame.groupBy(
             "user_id", F.session_window("ts", f"{SESSION_GAP_S} seconds").alias("w")
         )
         .agg(F.count("*").alias("n_events"), F.max("ts").alias("last_ts"))
@@ -54,8 +54,13 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "last_ts",
             "n_events",
         )
-        .orderBy("user_id", "session_start")
     )
+
+
+def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sessionize events per user with a 30-minute inactivity gap
+    (`sessions` over the batch events table), one row per session."""
+    return sessions(Catalog(spark, sf_dir).events).orderBy("user_id", "session_start")
 
 
 def asof_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:

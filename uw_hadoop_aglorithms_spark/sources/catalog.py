@@ -29,9 +29,8 @@ TABLE_NAMES = tuple(TABLE_SCHEMAS)
 #: column no longer fails at analysis time — Parquet fills it with
 #: NULLs silently — so drift is checked ONCE per (dir, table) per
 #: process at first access instead (ADVICE r12), from the footer the
-#: declared read skips. SPARK_GRAFT_SKIP_SCHEMA_VALIDATION=1 opts out
-#: (for deployments that control their data dir and want zero footer
-#: reads).
+#: declared read skips. A pair is added only once its check PASSED, so a
+#: caller that catches the drift error and retries fails again.
 _VALIDATED: set[tuple[str, str]] = set()
 
 
@@ -90,11 +89,8 @@ class Catalog:
         applies. Same comparison as validate_schemas(), which remains
         the all-tables sweeper for tests."""
         key = (self.sf_dir, name)
-        if key in _VALIDATED or os.environ.get(
-            "SPARK_GRAFT_SKIP_SCHEMA_VALIDATION"
-        ):
+        if key in _VALIDATED:
             return
-        _VALIDATED.add(key)
         actual = self.spark.read.parquet(
             f"{self.sf_dir}/{name}.parquet"
         ).schema
@@ -108,6 +104,7 @@ class Catalog:
                 f"schema drift in {self.sf_dir}/{name}.parquet: "
                 f"disk={got} declared={want}"
             )
+        _VALIDATED.add(key)
 
     def _load_events(self) -> DataFrame:
         """Normalize `events.ts` to TIMESTAMP_NTZ — the stored NAIVE

@@ -13,9 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from uw_hadoop_aglorithms_spark.functions.render import walls_out
+from uw_hadoop_aglorithms_spark.operators.temporal import sessions
 from uw_hadoop_aglorithms_spark.sources.schemas import EVENTS as _EVENTS_NTZ
+from uw_hadoop_aglorithms_spark.streaming.windows import geo_tagged, window_counts
 
 #: Replay granularity: events table split into this many time-range files,
 #: each micro-batch consuming one (the reference's 1-file-per-batch).
@@ -208,6 +211,57 @@ def _event_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
     )
 
 
+def _doc_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
+    """The document replay (prepare_doc_replay_dir), one file per
+    micro-batch; ts is the synthetic arrival instant."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(replay_dir)
+    )
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """The ONE stream drain: run `writer` from `checkpoint_dir` to
+    completion with Trigger.AvailableNow (every file present at start,
+    then stop) — finite and deterministic, which is what makes each
+    stream comparable to its batch form."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _drain_to_memory(
+    frame: DataFrame, checkpoint_dir: str, query_name: str, output_mode: str
+) -> DataFrame:
+    """Drain `frame` into the memory table `query_name` and return that
+    table with instants converted back to UTC walls (walls_out: the
+    runners' return boundary, independent of the Python process zone)."""
+    _drain(
+        frame.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode),
+        checkpoint_dir,
+    )
+    return walls_out(frame.sparkSession.table(query_name))
+
+
+def _watermarked_events(spark: SparkSession, replay_dir: str) -> DataFrame:
+    return _event_stream(spark, replay_dir).withWatermark("ts", WATERMARK)
+
+
 def stream_event_count(
     spark: SparkSession,
     replay_dir: str,
@@ -217,23 +271,10 @@ def stream_event_count(
 ) -> DataFrame:
     """T1 as a real stream: watermarked tumbling-window counts, run to
     completion with AvailableNow; returns the final result table."""
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
+    counts = window_counts(_watermarked_events(spark, replay_dir), minutes)
+    return _drain_to_memory(counts, checkpoint_dir, query_name, "complete").orderBy(
+        "window_start"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start")
 
 
 def stream_event_count_append(
@@ -247,23 +288,10 @@ def stream_event_count_append(
     and input rows later than the watermark are DROPPED — the late-data
     semantics the reference's perfectly-ordered replay never exercises.
     The final (non-finalized) window is absent from the output."""
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
+    counts = window_counts(_watermarked_events(spark, replay_dir), minutes)
+    return _drain_to_memory(counts, checkpoint_dir, query_name, "append").orderBy(
+        "window_start"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start")
 
 
 def stream_sliding_event_count(
@@ -276,25 +304,10 @@ def stream_sliding_event_count(
 ) -> DataFrame:
     """Sliding windows (width > slide) as a real stream: each event joins
     width/slide open windows; watermark bounds the open-window state."""
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(
-            F.window("ts", f"{minutes} minutes", f"{slide} minutes").alias("w")
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
+    counts = window_counts(_watermarked_events(spark, replay_dir), minutes, slide)
+    return _drain_to_memory(counts, checkpoint_dir, query_name, "complete").orderBy(
+        "window_start"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start")
 
 
 def stream_geo_region_count(
@@ -307,28 +320,11 @@ def stream_geo_region_count(
     """The reference RegionEventCount job end-to-end as a real stream:
     bounding-box tag (map-side, drops out-of-box events BEFORE the
     stateful aggregation) → watermarked window counts per region."""
-    from uw_hadoop_aglorithms_spark.functions.geo import region_tag, synth_lonlat
-
-    lon, lat = synth_lonlat(F.col("event_id"))
-    agg = (
-        _event_stream(spark, replay_dir)
-        .select("ts", region_tag(lon, lat).alias("region"))
-        .where(F.col("region").isNotNull())
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "region")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "region", "cnt")
+    tagged = geo_tagged(_event_stream(spark, replay_dir)).withWatermark("ts", WATERMARK)
+    counts = window_counts(tagged, minutes, keys=("region",))
+    return _drain_to_memory(counts, checkpoint_dir, query_name, "complete").orderBy(
+        "window_start", "region"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start", "region")
 
 
 def stream_range_join(
@@ -376,16 +372,11 @@ def stream_range_join(
         & (F.col("o_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {RANGE_WINDOW_S} SECONDS"))
         & (F.col("o_ts") <= F.col("p_ts") + F.expr(f"INTERVAL {RANGE_WINDOW_S} SECONDS")),
     ).select("purchase_id", "other_id", "user_id", "other_type")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return (
+        _drain_to_memory(joined, checkpoint_dir, query_name, "append")
+        .distinct()
+        .orderBy("purchase_id", "other_id")
     )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name).distinct()).orderBy("purchase_id", "other_id")
 
 
 def stream_user_sessions(
@@ -394,8 +385,9 @@ def stream_user_sessions(
     checkpoint_dir: str,
     query_name: str = "stream_user_sessions",
 ) -> DataFrame:
-    """Sessionization as a real stream: the streaming form of
-    operators/temporal.user_sessions (same 30-minute session_window).
+    """Sessionization as a real stream: temporal.sessions (the batch
+    user_sessions query, same 30-minute session_window) over the
+    watermarked replay.
 
     APPEND mode emits a session exactly once, when the watermark passes
     its close (last event + gap) — so state holds only OPEN sessions per
@@ -404,33 +396,10 @@ def stream_user_sessions(
     in state and are NOT emitted — the test asserts emitted rows equal
     the batch sessionization restricted to watermark-closed sessions.
     """
-    from uw_hadoop_aglorithms_spark.operators.temporal import SESSION_GAP_S
-
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(
-            "user_id",
-            F.session_window("ts", f"{SESSION_GAP_S} seconds").alias("w"),
-        )
-        .agg(F.count("*").alias("n_events"), F.max("ts").alias("last_ts"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "last_ts",
-            "n_events",
-        )
+    agg = sessions(_watermarked_events(spark, replay_dir))
+    return _drain_to_memory(agg, checkpoint_dir, query_name, "append").orderBy(
+        "user_id", "session_start"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("user_id", "session_start")
 
 
 def stream_region_event_count(
@@ -441,25 +410,12 @@ def stream_region_event_count(
     query_name: str = "stream_region_event_count",
 ) -> DataFrame:
     """T2 as a real stream: windowed counts per event_type."""
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(
-            F.window("ts", f"{minutes} minutes").alias("w"), F.col("event_type")
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
+    counts = window_counts(
+        _watermarked_events(spark, replay_dir), minutes, keys=("event_type",)
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_memory(counts, checkpoint_dir, query_name, "complete").orderBy(
+        "window_start", "event_type"
     )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start", "event_type")
 
 
 #: Ingestion-time dedup: duplicates arriving within this event-time
@@ -560,20 +516,9 @@ def stream_exact_dedup(
     front-door filter a 100 TB pipeline runs so most duplicates never
     land in the lake at all.
     """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
+        _doc_stream(spark, replay_dir)
         .select("doc_id", "ts", F.sha2(norm, 256).alias("digest"))
         .withWatermark("ts", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["digest"])
@@ -583,25 +528,15 @@ def stream_exact_dedup(
     # cannot RECOVER from a checkpoint, so restart semantics are only
     # testable (and only deployable) against the durable sink
     if output_dir is None:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return walls_out(spark.table(query_name)).orderBy("ts", "doc_id")
-    q = (
+        return _drain_to_memory(
+            stream, checkpoint_dir, query_name, "append"
+        ).orderBy("ts", "doc_id")
+    _drain(
         stream.writeStream.format("parquet")
         .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", output_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     # same return boundary as the memory-sink leg: instants -> UTC walls
     return walls_out(spark.read.parquet(output_dir)).orderBy("ts", "doc_id")
 
@@ -629,8 +564,6 @@ def stream_decontaminate(
     audit. Counts carry the bitmap's deterministic false positives,
     identical to the batch Bloom variant (asserted in tests).
     """
-    from pyspark.sql import types as T
-
     from uw_hadoop_aglorithms_spark.operators import dedup
     from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
 
@@ -642,17 +575,8 @@ def stream_decontaminate(
     )
     bitmap = dedup.bloom_bitmap_from_grams(held_sh.select("gh").distinct())
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
     stream_docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
+        _doc_stream(spark, replay_dir)
         .where(F.col("doc_id") % dedup.DECON_TEST_MOD != 0)
         .withWatermark("ts", WATERMARK)
     )
@@ -665,16 +589,9 @@ def stream_decontaminate(
         .agg(F.count("*").alias("n_shared_ngrams"))
         .select(F.col("w.start").alias("window_start"), "doc_id", "n_shared_ngrams")
     )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_memory(counts, checkpoint_dir, query_name, "append").orderBy(
+        "doc_id"
     )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("doc_id")
 
 
 def stream_merge_to_lake(
@@ -750,14 +667,10 @@ def stream_merge_to_lake(
         if post_merge is not None and days:
             post_merge(days)
 
-    q = (
-        _event_stream(spark, replay_dir)
-        .writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _event_stream(spark, replay_dir).writeStream.foreachBatch(_merge_batch),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def stream_neardup_ingest(
@@ -813,21 +726,11 @@ def stream_neardup_ingest(
     """
     import os
 
-    from pyspark.sql import types as T
-
     from uw_hadoop_aglorithms_spark.operators import dedup
 
     cap = dedup.BAND_BUCKET_CAP if bucket_cap is None else bucket_cap
     gated_path = pairs_path.rstrip("/") + "_gated"
     log_table = f"{prefix}_ingest_log"
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
 
     def _ingest(batch, bid: int) -> None:
         # EVERYTHING here runs through the batch's own (cloned
@@ -884,14 +787,8 @@ def stream_neardup_ingest(
             "append"
         ).format("parquet").saveAsTable(log_table)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-        .writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _doc_stream(spark, replay_dir).writeStream.foreachBatch(_ingest),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return spark.read.parquet(pairs_path).orderBy("doc_a", "doc_b")

@@ -1,9 +1,13 @@
-"""Batch event-time windowing over `events` (SURVEY.md §2.10 T1-T3).
+"""Event-time windowing over `events` (SURVEY.md §2.10 T1-T3).
 
 Replaces the reference's clock-driven DStream batches with event-time
 windows computed from the `ts` column — the data declares its own time.
 `event_type` plays the role of the reference's geo-region tag
 (FIXTURES.md: the bounding-box predicate itself lives in functions/geo.py).
+
+Each query body is one frame→frame function (`window_counts`,
+`geo_tagged`): the batch functions below apply it to `Catalog.events`,
+the `runner.stream_*` functions to the watermarked replay stream.
 
 Window alignment: F.window() buckets align to the Unix epoch in the
 session timezone (pinned UTC in session.py), identical to
@@ -29,16 +33,45 @@ TREND_MIN = 10
 TREND_FACTOR = 2
 
 
+def window_counts(
+    frame: DataFrame,
+    minutes: int,
+    slide: int | None = None,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The ONE window-count query, batch or stream: counts of `frame`
+    rows per event-time window of `minutes` (sliding by `slide` minutes
+    when given, else tumbling) and per `keys` column. Output columns:
+    window_start, *keys, cnt. A stream passes its watermarked frame; the
+    query body is the same either way."""
+    width = f"{minutes} minutes"
+    w = F.window("ts", width, f"{slide} minutes") if slide else F.window("ts", width)
+    return (
+        frame.groupBy(w.alias("w"), *keys)
+        .agg(F.count("*").alias("cnt"))
+        .select(F.col("w.start").alias("window_start"), *keys, "cnt")
+    )
+
+
+def geo_tagged(frame: DataFrame) -> DataFrame:
+    """The REAL bounding-box tagger (reference RegionEventCount.scala:
+    66-98): (ts, region) for points inside the goldman/citigroup boxes
+    (citigroup priority, inclusive bounds); out-of-box rows are dropped.
+    The fixture has no lon/lat, so coordinates derive deterministically
+    from event_id (functions/geo.py synth_lonlat) — pure column
+    arithmetic, identical doubles in the DuckDB oracle. Map-side: the
+    filter drops ~99% of events before any shuffle or stream state."""
+    lon, lat = synth_lonlat(F.col("event_id"))
+    return frame.select("ts", region_tag(lon, lat).alias("region")).where(
+        F.col("region").isNotNull()
+    )
+
+
 def event_count(spark: SparkSession, sf_dir: str, minutes: int = 60) -> DataFrame:
     """T1: tumbling-window total event counts (reference EventCount.scala:
     66-72, reduceByKeyAndWindow with window == slide == 60 min)."""
-    cat = Catalog(spark, sf_dir)
-    return (
-        cat.events.groupBy(F.window("ts", f"{minutes} minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
-        .orderBy("window_start")
-    )
+    events = Catalog(spark, sf_dir).events
+    return window_counts(events, minutes).orderBy("window_start")
 
 
 def sliding_event_count(
@@ -54,52 +87,26 @@ def sliding_event_count(
     map-side, then aggregates with partial combine — shuffle volume is
     |windows × 2| partials, independent of event volume.
     """
-    cat = Catalog(spark, sf_dir)
-    return (
-        cat.events.groupBy(
-            F.window("ts", f"{minutes} minutes", f"{slide} minutes").alias("w")
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
-        .orderBy("window_start")
-    )
+    events = Catalog(spark, sf_dir).events
+    return window_counts(events, minutes, slide).orderBy("window_start")
 
 
 def region_event_count(spark: SparkSession, sf_dir: str, minutes: int = 60) -> DataFrame:
     """T2: windowed counts per region tag (reference RegionEventCount.scala:
     85-98; `event_type` is the fixture's stand-in for the geo tag)."""
-    cat = Catalog(spark, sf_dir)
-    return (
-        cat.events.groupBy(
-            F.window("ts", f"{minutes} minutes").alias("w"), F.col("event_type")
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-        .orderBy("window_start", "event_type")
+    events = Catalog(spark, sf_dir).events
+    return window_counts(events, minutes, keys=("event_type",)).orderBy(
+        "window_start", "event_type"
     )
 
 
 def geo_region_count(spark: SparkSession, sf_dir: str, minutes: int = 60) -> DataFrame:
-    """T2 with the REAL bounding-box tagger (reference RegionEventCount.
-    scala:66-98): points inside the goldman/citigroup boxes are tagged
-    (citigroup priority, inclusive bounds) and counted per tumbling
-    window. The fixture has no lon/lat, so coordinates derive
-    deterministically from event_id (functions/geo.py synth_lonlat) —
-    pure column arithmetic, identical doubles in the DuckDB oracle.
-
-    Scale shape: tag + filter are map-side (the filter drops ~99% of
-    events before any shuffle); the aggregate shuffles |windows×regions|
-    partial counts only.
-    """
-    cat = Catalog(spark, sf_dir)
-    lon, lat = synth_lonlat(F.col("event_id"))
-    return (
-        cat.events.select("ts", region_tag(lon, lat).alias("region"))
-        .where(F.col("region").isNotNull())
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "region")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "region", "cnt")
-        .orderBy("window_start", "region")
+    """T2 with the real bounding-box tagger (geo_tagged), counted per
+    tumbling window. Scale shape: tag + filter are map-side; the
+    aggregate shuffles |windows×regions| partial counts only."""
+    tagged = geo_tagged(Catalog(spark, sf_dir).events)
+    return window_counts(tagged, minutes, keys=("region",)).orderBy(
+        "window_start", "region"
     )
 
 
@@ -112,13 +119,8 @@ def trending_arrivals(spark: SparkSession, sf_dir: str, minutes: int = 10) -> Da
     updates keys present in a batch), which is exactly lag() over the
     present windows; first appearance ⇒ prev = 0.
     """
-    counts = (
-        Catalog(spark, sf_dir)
-        .events.groupBy(
-            F.window("ts", f"{minutes} minutes").alias("w"), F.col("event_type")
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
+    counts = window_counts(
+        Catalog(spark, sf_dir).events, minutes, keys=("event_type",)
     )
     w = Window.partitionBy("event_type").orderBy("window_start")
     return (
